@@ -15,8 +15,10 @@ import pytest
 
 from dataframework_spark.operators.multimodal import (
     decode_bmp,
+    decode_gif,
     decode_wav,
     synth_bmp,
+    synth_gif,
     synth_wav,
 )
 
@@ -162,3 +164,41 @@ def test_vad_gated_synth_structure():
             1 for f in range(nf) if act[f] and (f == 0 or not act[f - 1])
         )
         assert brute >= 1
+
+
+@pytest.mark.parametrize("doc_ids", [[], [0, 7, 41]], ids=["empty", "three_rows"])
+@pytest.mark.parametrize(
+    "query, columns, features",
+    [
+        (
+            "mm_wav_decode",
+            "doc_id sample_rate n_samples duration_ms rms n_zero_cross",
+            lambda d: decode_wav(synth_wav(d)),
+        ),
+        (
+            "mm_gif_decode",
+            "doc_id width height mean_idx_e4 checksum ycheck corner_tl interlaced",
+            lambda d: decode_gif(synth_gif(d)),
+        ),
+    ],
+    ids=["wav", "gif"],
+)
+def test_per_doc_degenerate_documents(
+    spark, sf_dir, tmp_path, doc_ids, query, columns, features
+):
+    """A per-doc decode over a 0-row table gives 0 rows (no Python-worker
+    crash); over 3 rows it gives exactly those doc_ids, each row equal to
+    ``(doc_id, *features(doc_id))`` under the declared column order."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataframework_spark.registry import get_spec
+
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(docs.take(pa.array(doc_ids, pa.int64())), tmp_path / "documents.parquet")
+    df = get_spec(query).fn(spark, str(tmp_path))
+    assert df.columns == columns.split()
+    rows = sorted(tuple(r) for r in df.collect())
+    assert rows == [(d, *features(d)) for d in doc_ids]

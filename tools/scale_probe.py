@@ -10,13 +10,24 @@ M×, and prints the time ratio next to the data ratio.  A linear-path
 query should scale ≲ M (per-task overheads amortize); anything
 super-linear is a plan bug the small-SF suite cannot see.
 
-Usage:  python tools/scale_probe.py [M]        (default M=10)
-Writes the replica under .scratch/scale{M}x (~M × 16 MB) and one JSON
-line of results.
+Each time is end to end: from the query-function call (catalog, plan
+construction, any eager jobs) to the last row in the noop sink, best of
+two runs with the cache cleared between.  A query that raises is recorded
+with its error and the rest of the list still runs.
+
+Usage:  python tools/scale_probe.py [M] [--probe name,...] [--out FILE]
+M defaults to 10 and the probe list to ``PROBE``.  Writes the replica
+under .scratch/scale{M}x (~M × 16 MB) and one JSON line of results to
+stdout, and to FILE when ``--out`` is given.  The per-wave 1000× rows
+in SCALE.md are this tool with the wave's names, for example:
+
+    python tools/scale_probe.py 1000 --out SCALEPROBE_R10OPS_r10.json \
+        --probe mm_tiff_decode,mm_flac_decode,mm_jpeg_color_decode,mm_decode_router
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -109,9 +120,8 @@ def build_replica(spark, m: int, out_dir: str) -> None:
 def time_query(spark, fn, sf_dir: str, reps: int = 2) -> float:
     best = None
     for _ in range(reps):
-        df = fn(spark, sf_dir)
         t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
         spark.catalog.clearCache()
@@ -119,28 +129,40 @@ def time_query(spark, fn, sf_dir: str, reps: int = 2) -> float:
 
 
 def main() -> None:
-    m = int(sys.argv[1]) if len(sys.argv) > 1 else 10
+    ap = argparse.ArgumentParser(description="time a probe list at 1x and Mx")
+    ap.add_argument("m", nargs="?", type=int, default=10, help="replica factor M")
+    ap.add_argument("--probe", default=",".join(PROBE), help="comma-separated query names")
+    ap.add_argument("--out", help="also write the JSON line to this file")
+    args = ap.parse_args()
+    m = args.m
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            ".scratch", f"scale{m}x")
+    specs = all_queries()
+    probe = [n.strip() for n in args.probe.split(",") if n.strip()]
+    unknown = [n for n in probe if n not in specs]
+    if unknown:
+        ap.error(f"unknown probe queries: {unknown}")
     spark = get_spark(app_name="scale-probe", cpus=os.cpu_count() or 8)
     build_replica(spark, m, out_dir)
-    specs = all_queries()
-    probe = PROBE
-    if os.environ.get("SPARK_GRAFT_PROBE"):  # comma-separated override
-        probe = [n.strip() for n in os.environ["SPARK_GRAFT_PROBE"].split(",") if n.strip()]
-        unknown = [n for n in probe if n not in specs]
-        assert not unknown, f"unknown probe queries: {unknown}"
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.range(64).toDF("x").mapInPandas(lambda it: it, "x bigint").write.format(
         "noop"
     ).mode("overwrite").save()
     results = {}
     for name in probe:
-        t1 = time_query(spark, specs[name].fn, BASE)
-        tm = time_query(spark, specs[name].fn, out_dir)
-        results[name] = {"t_1x": t1, f"t_{m}x": tm,
-                         "ratio": round(tm / t1, 2) if t1 > 0 else None}
-    print(json.dumps({"m": m, "results": results}))
+        try:
+            t1 = time_query(spark, specs[name].fn, BASE)
+            tm = time_query(spark, specs[name].fn, out_dir)
+            results[name] = {"t_1x": t1, f"t_{m}x": tm,
+                             "ratio": round(tm / t1, 2) if t1 > 0 else None}
+        except Exception as exc:  # record, keep probing the rest
+            results[name] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
+        print(f"# {name}: {results[name]}", file=sys.stderr)
+    line = json.dumps({"m": m, "results": results})
+    print(line)
+    if args.out:
+        with open(args.out, "w") as f:
+            f.write(line + "\n")
     spark.stop()
 
 
